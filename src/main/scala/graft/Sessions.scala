@@ -45,7 +45,9 @@ object Sessions {
       .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.expressions.register(spark)
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
     checkDecSumContract(spark)
     spark
   }

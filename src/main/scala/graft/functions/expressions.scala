@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the engine's hot per-row kernels.
@@ -48,6 +47,16 @@ object expressions {
     if (DataType.equalsIgnoreNullability(e.dataType, expected)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$what expects ${expected.simpleString}, got ${e.dataType.simpleString}")
+
+  /** [[requireType]] over an n-ary kernel's argument list, in order. */
+  private def requireArgs(fn: String, children: Seq[Expression],
+      args: (String, DataType)*): TypeCheckResult =
+    if (children.length != args.length)
+      TypeCheckResult.TypeCheckFailure(s"$fn takes (${args.map(_._1).mkString(", ")})")
+    else children.zip(args).iterator
+      .map { case (c, (name, t)) => requireType(c, t, s"$fn $name") }
+      .find(_ != TypeCheckResult.TypeCheckSuccess)
+      .getOrElse(TypeCheckResult.TypeCheckSuccess)
 
   /** array<string> shingles (or array<long> of their xxhash64 values) →
     * array<long> MinHash signature: one xxhash64 (seed 42, == SQL
@@ -1250,35 +1259,15 @@ object expressions {
       s"cell_argmax(broadcast#${bc.id}, $child)"
   }
 
-  /** [[CellArgmax]] as a Column — nb_score's per-broadcast registration
-    * pattern. */
-  def cell_argmax(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[CellCents],
-      embedding: Column): Column = {
-    val name = s"cell_argmax_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1,
-          s"$name requires exactly 1 argument (embedding)")
-        CellArgmax(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, embedding)
-  }
+  /** [[CellArgmax]] as a Column. */
+  def cell_argmax(bc: org.apache.spark.broadcast.Broadcast[CellCents],
+      embedding: Column): Column =
+    GraftColumn(e => CellArgmax(e.head, bc), embedding)
 
-  /** [[CentroidArgmin]] as a Column — per-call unique registration
-    * keyed by the broadcast id (nb_score's pattern; a Lloyd fit
-    * registers one per round, all dropped with the session). */
-  def centroid_argmin(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
-      xq: Column): Column = {
-    val name = s"centroid_argmin_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1, s"$name requires exactly 1 argument (xq)")
-        CentroidArgmin(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, xq)
-  }
+  /** [[CentroidArgmin]] as a Column. */
+  def centroid_argmin(bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
+      xq: Column): Column =
+    GraftColumn(e => CentroidArgmin(e.head, bc), xq)
 
   /** Misra–Gries heavy-hitter sketch over a string column: at most `k`
     * (token, est) counters in O(k) space, one stream pass, mergeable
@@ -1723,7 +1712,7 @@ object expressions {
         l: Expression, r: Expression): PqAdcDist = copy(left = l, right = r)
   }
 
-  /** The per-query bounded top-k state of [[PqScanTopK]]: for each query,
+  /** The per-query bounded top-k state of [[ScanTopK]]: for each query,
     * a k-entry binary max-heap ordered by (dist, id) — the root is the
     * WORST kept pair, so a better candidate evicts in O(log k). */
   private[functions] final class PqTopKState(val nq: Int, val k: Int) {
@@ -1760,32 +1749,76 @@ object expressions {
         }
       }
     }
+  }
 
-    // merge + wire format shared by every TypedImperativeAggregate over
-    // this state (PqScanTopK, Bm25ScanTopK) — one copy to keep in sync
-    def mergeFrom(other: PqTopKState): this.type = {
+  /** The scan-local top-k aggregates' shared half: a [[PqTopKState]] per
+    * partial, heap-to-heap merge, the state's wire format, and the final
+    * emit — per query, its kept (key, id) pairs in ascending order as
+    * (query_id, id, rank, score) rows. Subclasses supply the scoring
+    * `update`, the output `dataType` ([[rowType]]) and the key `decode`. */
+  abstract class ScanTopK
+      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+    def bc: org.apache.spark.broadcast.Broadcast[_]
+    def k: Int
+    protected def fnName: String
+    protected def numQueries: Int
+    protected def queryId(qi: Int): Long
+    /** Heap key → the output score column's value. */
+    protected def decode(key: Long): Any
+
+    protected def rowType(idName: String, scoreName: String, scoreType: DataType): DataType =
+      ArrayType(
+        StructType(Seq(
+          StructField("query_id", LongType, nullable = false),
+          StructField(idName, LongType, nullable = false),
+          StructField("rank", IntegerType, nullable = false),
+          StructField(scoreName, scoreType, nullable = false))),
+        containsNull = false)
+    override def nullable: Boolean = false
+
+    override def createAggregationBuffer(): PqTopKState = new PqTopKState(numQueries, k)
+
+    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState = {
       var qi = 0
-      while (qi < nq) {
+      while (qi < buf.nq) {
         var i = 0
         while (i < other.size(qi)) {
-          push(qi, other.dist(qi)(i), other.id(qi)(i))
+          buf.push(qi, other.dist(qi)(i), other.id(qi)(i))
           i += 1
         }
         qi += 1
       }
-      this
+      buf
     }
 
-    def writeTo: Array[Byte] = {
+    override def eval(buf: PqTopKState): Any = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var qi = 0
+      while (qi < buf.nq) {
+        val n = buf.size(qi)
+        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
+          .sortBy { case (d, v) => (d, v) }
+        var i = 0
+        while (i < n) {
+          out += org.apache.spark.sql.catalyst.InternalRow(
+            queryId(qi), pairs(i)._2, i + 1, decode(pairs(i)._1))
+          i += 1
+        }
+        qi += 1
+      }
+      new GenericArrayData(out.toArray)
+    }
+
+    override def serialize(buf: PqTopKState): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val o = new java.io.DataOutputStream(bos)
-      o.writeInt(nq); o.writeInt(k)
+      o.writeInt(buf.nq); o.writeInt(buf.k)
       var qi = 0
-      while (qi < nq) {
-        o.writeInt(size(qi))
+      while (qi < buf.nq) {
+        o.writeInt(buf.size(qi))
         var i = 0
-        while (i < size(qi)) {
-          o.writeLong(dist(qi)(i)); o.writeLong(id(qi)(i))
+        while (i < buf.size(qi)) {
+          o.writeLong(buf.dist(qi)(i)); o.writeLong(buf.id(qi)(i))
           i += 1
         }
         qi += 1
@@ -1793,10 +1826,8 @@ object expressions {
       o.flush()
       bos.toByteArray
     }
-  }
 
-  private[functions] object PqTopKState {
-    def readFrom(bytes: Array[Byte]): PqTopKState = {
+    override def deserialize(bytes: Array[Byte]): PqTopKState = {
       val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
       val nq = in.readInt(); val kk = in.readInt()
       val buf = new PqTopKState(nq, kk)
@@ -1813,13 +1844,16 @@ object expressions {
       }
       buf
     }
+
+    override def toString: String =
+      s"$fnName(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** PQ ADC scoring + top-k as ONE scan-local aggregate — the FAISS-shaped
     * ADC scan re-expressed for Spark. Input rows are the compressed code
     * store (vec_id, codes[, cell]); the query set (id, flattened M·K
     * distance table, optional probe-cell set) rides in as a BROADCAST
-    * captured at registration (a few MB for thousands of queries — a
+    * captured by the expression (a few MB for thousands of queries — a
     * bounded serving batch by contract). Each task scans its vectors
     * once, scores EVERY query against the codes in a primitive loop, and
     * keeps per-query k-entry heaps; partials merge heap-to-heap and the
@@ -1846,32 +1880,19 @@ object expressions {
       subK: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
     private def cellFiltered = children.length == 3
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("adc_dist", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 2 && children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "pq_scan_topk takes (vec_id, codes[, cell])")
-      val a = requireType(children(0), LongType, "pq_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(IntegerType), "pq_scan_topk codes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      if (cellFiltered) requireType(children(2), IntegerType, "pq_scan_topk cell")
-      else TypeCheckResult.TypeCheckSuccess
-    }
+    override def dataType: DataType = rowType("neighbor_id", "adc_dist", LongType)
+    override protected def fnName: String = "pq_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      Seq("vec_id" -> LongType, "codes" -> ArrayType(IntegerType)) ++
+        (if (cellFiltered) Seq("cell" -> IntegerType) else Nil): _*)
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
+    override protected def numQueries: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = key
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -1910,33 +1931,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): PqScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): PqScanTopK =
@@ -1944,33 +1938,13 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): PqScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"pq_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[PqScanTopK]] as a Column — per-call registration capturing the
-    * query broadcast. The registered name is UNIQUE per broadcast
-    * (`pq_scan_topk_b<id>`), so two concurrent callers on the same
-    * session (two streaming lookups, a streaming batch overlapping a
-    * batch q78) can never interleave register/analyze and bind each
-    * other's broadcast; callers drop the entry with [[dropTempFunction]]
-    * once their plan is analyzed. */
+  /** [[PqScanTopK]] as a Column. */
   def pq_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long], Array[Int])]],
-      k: Int, subK: Int, cols: Column*): Column = {
-    val name = s"pq_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PqScanTopK(exprs, bc, k, subK), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[pq_scan_topk]] registers for `bc` —
-    * for [[dropTempFunction]] once the caller's plan is analyzed. */
-  def pqScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"pq_scan_topk_b${bc.id}"
+      k: Int, subK: Int, cols: Column*): Column =
+    GraftColumn(PqScanTopK(_, bc, k, subK), cols: _*)
 
   /** The broadcast operand of [[Bm25ScanTopK]]: the QUERY SET as an
     * inverted term index — `qids` (sorted query ids), `termHash` (sorted
@@ -2021,32 +1995,19 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fp", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "bm25_scan_topk takes (doc_id, term_hashes, weights)")
-      val a = requireType(children(0), LongType, "bm25_scan_topk doc_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(LongType), "bm25_scan_topk term_hashes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(LongType), "bm25_scan_topk weights")
-    }
+    override def dataType: DataType = rowType("doc_id", "score_fp", LongType)
+    override protected def fnName: String = "bm25_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      "doc_id" -> LongType, "term_hashes" -> ArrayType(LongType), "weights" -> ArrayType(LongType))
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(bc.value._1.length))
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value._1.length, k)
+    override protected def numQueries: Int = bc.value._1.length
+    override protected def queryId(qi: Int): Long = bc.value._1(qi)
+    override protected def decode(key: Long): Any = -key
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val did = children(0).eval(row)
@@ -2100,33 +2061,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qids = bc.value._1
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qids(qi), pairs(i)._2, i + 1, -pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): Bm25ScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): Bm25ScanTopK =
@@ -2134,28 +2068,12 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): Bm25ScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"bm25_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[Bm25ScanTopK]] as a Column — [[pq_scan_topk]]'s per-call unique
-    * registration pattern (name `bm25_scan_topk_b<id>`; drop with
-    * [[dropTempFunction]]([[bm25ScanTopKName]]) after analysis). */
-  def bm25_scan_topk(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Bm25QueryIndex],
-      k: Int, cols: Column*): Column = {
-    val name = s"bm25_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => Bm25ScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[bm25_scan_topk]] registers for `bc`. */
-  def bm25ScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bm25_scan_topk_b${bc.id}"
+  /** [[Bm25ScanTopK]] as a Column. */
+  def bm25_scan_topk(bc: org.apache.spark.broadcast.Broadcast[Bm25QueryIndex],
+      k: Int, cols: Column*): Column =
+    GraftColumn(Bm25ScanTopK(_, bc, k), cols: _*)
 
   /** The broadcast operand of [[Bm25RawScanTopK]]: [[Bm25QueryIndex]]
     * plus the QUERY-TIME scoring model — `idfFp(i)` is the fixed-point
@@ -2190,36 +2108,20 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fp", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 4)
-        return TypeCheckResult.TypeCheckFailure(
-          "bm25_raw_scan_topk takes (doc_id, term_hashes, tfs, len)")
-      val a = requireType(children(0), LongType, "bm25_raw_scan_topk doc_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(LongType),
-        "bm25_raw_scan_topk term_hashes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      val c = requireType(children(2), ArrayType(LongType),
-        "bm25_raw_scan_topk tfs")
-      if (c != TypeCheckResult.TypeCheckSuccess) return c
-      requireType(children(3), LongType, "bm25_raw_scan_topk len")
-    }
+    override def dataType: DataType = rowType("doc_id", "score_fp", LongType)
+    override protected def fnName: String = "bm25_raw_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      "doc_id" -> LongType, "term_hashes" -> ArrayType(LongType), "tfs" -> ArrayType(LongType),
+      "len" -> LongType)
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(bc.value._1.length))
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value._1.length, k)
+    override protected def numQueries: Int = bc.value._1.length
+    override protected def queryId(qi: Int): Long = bc.value._1(qi)
+    override protected def decode(key: Long): Any = -key
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val did = children(0).eval(row)
@@ -2277,33 +2179,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qids = bc.value._1
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qids(qi), pairs(i)._2, i + 1, -pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): Bm25RawScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): Bm25RawScanTopK =
@@ -2311,37 +2186,12 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): Bm25RawScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"bm25_raw_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[Bm25RawScanTopK]] as a Column — per-call unique registration
-    * (name `bm25_raw_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[bm25RawScanTopKName]]) after analysis). */
-  def bm25_raw_scan_topk(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Bm25RawQueryIndex],
-      k: Int, cols: Column*): Column = {
-    val name = s"bm25_raw_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => Bm25RawScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[bm25_raw_scan_topk]] registers. */
-  def bm25RawScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bm25_raw_scan_topk_b${bc.id}"
-
-  /** Drop a per-call temp function (see [[pq_scan_topk]] /
-    * [[bloom_probe_broadcast]]): after the caller forces analysis the
-    * registry entry's only effect is pinning the captured broadcast —
-    * dropping it lets a long-running serving session reclaim one entry
-    * (and one broadcast reference) per call instead of accumulating. */
-  def dropTempFunction(spark: SparkSession, name: String): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+  /** [[Bm25RawScanTopK]] as a Column. */
+  def bm25_raw_scan_topk(bc: org.apache.spark.broadcast.Broadcast[Bm25RawQueryIndex],
+      k: Int, cols: Column*): Column =
+    GraftColumn(Bm25RawScanTopK(_, bc, k), cols: _*)
 
   /** Order-preserving double ↔ long bijection for heap keys, flipped so
     * score DESC == encoded ASC (the PqTopKState natural order): the
@@ -2360,6 +2210,18 @@ object expressions {
       java.lang.Double.longBitsToDouble(
         asc ^ ((asc >> 63) & 0x7fffffffffffffffL))
     }
+  }
+
+  /** key → slots holding it, in insertion order — the per-task probe
+    * indexes of [[LshScanTopK]], [[MihMatchScan]] and [[IvfScanTopK]]. */
+  private def slotIndex[K](pairs: Iterator[(K, Int)]): java.util.HashMap[K, Array[Int]] = {
+    val m = new java.util.HashMap[K, scala.collection.mutable.ArrayBuffer[Int]]()
+    pairs.foreach { case (key, slot) =>
+      m.computeIfAbsent(key, _ => scala.collection.mutable.ArrayBuffer.empty[Int]) += slot
+    }
+    val out = new java.util.HashMap[K, Array[Int]](m.size() * 2)
+    m.forEach((key, buf) => out.put(key, buf.toArray))
+    out
   }
 
   /** The broadcast operand of [[LshScanTopK]]: one entry per query —
@@ -2414,70 +2276,24 @@ object expressions {
       nPlanes: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "lsh_scan_topk takes (vec_id, embedding, sigs)")
-      val a = requireType(children(0), LongType, "lsh_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(FloatType),
-        "lsh_scan_topk embedding")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(IntegerType), "lsh_scan_topk sigs")
-    }
+    override def dataType: DataType = rowType("neighbor_id", "score", DoubleType)
+    override protected def fnName: String = "lsh_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      "vec_id" -> LongType, "embedding" -> ArrayType(FloatType), "sigs" -> ArrayType(IntegerType))
 
-    // order-preserving double -> long bijection (IEEE total order over
-    // the non-NaN doubles this kernel produces), flipped so score DESC
-    // == encoded ASC — the heap's natural order. decode inverts exactly.
-    @inline private def encodeDesc(score: Double): Long =
-      DescDouble.encode(score)
-    @inline private def decodeDesc(enc: Long): Double =
-      DescDouble.decode(enc)
-
-    /** (table, probe-signature) → query slots, open-addressed; built
-      * once per deserialized expression copy (per task). Key packs
-      * (table, sig); buckets hold query-slot arrays. */
-    @transient private lazy val probeIndex: java.util.HashMap[Long, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-      var qi = 0
-      while (qi < qs.length) {
-        val sigs = qs(qi)._4
-        var t = 0
-        while (t < sigs.length) {
-          var p = -1
-          while (p < nPlanes) {
-            val probe = if (p < 0) sigs(t) else sigs(t) ^ (1 << p)
-            val key = (t.toLong << 32) | (probe.toLong & 0xffffffffL)
-            var buf = m.get(key)
-            if (buf == null) {
-              buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-              m.put(key, buf)
-            }
-            // the probe set {qsig} ∪ {qsig⊕2^p} is duplicate-free per
-            // query (xor with a nonzero bit never equals the base), so
-            // no within-bucket dedup is needed here
-            buf += qi
-            p += 1
-          }
-          t += 1
-        }
-        qi += 1
-      }
-      val out = new java.util.HashMap[Long, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
+    /** (table, probe-signature) → query slots, built once per
+      * deserialized expression copy (per task). Key packs (table, sig). */
+    @transient private lazy val probeIndex = slotIndex[Long](for {
+      (q, qi) <- bc.value.iterator.zipWithIndex
+      (sig, t) <- q._4.iterator.zipWithIndex
+      // the probe set {qsig} ∪ {qsig⊕2^p} is duplicate-free per query
+      // (xor with a nonzero bit never equals the base), so no
+      // within-bucket dedup is needed here
+      p <- -1 until nPlanes
+      probe = if (p < 0) sig else sig ^ (1 << p)
+    } yield ((t.toLong << 32) | (probe.toLong & 0xffffffffL), qi))
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -2490,8 +2306,9 @@ object expressions {
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
+    override protected def numQueries: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -2544,7 +2361,7 @@ object expressions {
                   var dab = 0L
                   var i = 0
                   while (i < n) { dab += qv(i) * st.qv(i); i += 1 }
-                  buf.push(qi, encodeDesc(
+                  buf.push(qi, DescDouble.encode(
                     dab.toDouble / (math.sqrt(qq.toDouble) * math.sqrt(dbb.toDouble))),
                     vecId)
                 }
@@ -2558,33 +2375,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, decodeDesc(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): LshScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): LshScanTopK =
@@ -2592,28 +2382,12 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): LshScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"lsh_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[LshScanTopK]] as a Column — per-call unique registration
-    * (name `lsh_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[lshScanTopKName]]) after analysis). */
-  def lsh_scan_topk(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[LshQuerySet],
-      k: Int, nPlanes: Int, cols: Column*): Column = {
-    val name = s"lsh_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => LshScanTopK(exprs, bc, k, nPlanes), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[lsh_scan_topk]] registers. */
-  def lshScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"lsh_scan_topk_b${bc.id}"
+  /** [[LshScanTopK]] as a Column. */
+  def lsh_scan_topk(bc: org.apache.spark.broadcast.Broadcast[LshQuerySet],
+      k: Int, nPlanes: Int, cols: Column*): Column =
+    GraftColumn(LshScanTopK(_, bc, k, nPlanes), cols: _*)
 
   /** The broadcast operand of [[MihMatchScan]]: the arriving batch's
     * DISTINCT frame hashes (slot-indexed), bounded by the serving-batch
@@ -2652,40 +2426,14 @@ object expressions {
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "mih_match_scan takes (band, bv, h)")
-      val a = requireType(children(0), IntegerType, "mih_match_scan band")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), IntegerType, "mih_match_scan bv")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), LongType, "mih_match_scan h")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs("mih_match_scan", children,
+      "band" -> IntegerType, "bv" -> IntegerType, "h" -> LongType)
 
     /** (band << 16 | chunk) → arriving slots, built once per task. */
-    @transient private lazy val probeIndex: java.util.HashMap[Integer, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Integer, scala.collection.mutable.ArrayBuffer[Int]]()
-      var i = 0
-      while (i < qs.length) {
-        var b = 0
-        while (b < 4) {
-          val key = (b << 16) | (((qs(i) >>> (b * 16)) & 0xffffL).toInt)
-          var buf = m.get(key)
-          if (buf == null) {
-            buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-            m.put(key, buf)
-          }
-          buf += i
-          b += 1
-        }
-        i += 1
-      }
-      val out = new java.util.HashMap[Integer, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
+    @transient private lazy val probeIndex = slotIndex[Integer](for {
+      (h, i) <- bc.value.iterator.zipWithIndex
+      b <- (0 until 4).iterator
+    } yield (Integer.valueOf((b << 16) | ((h >>> (b * 16)) & 0xffffL).toInt), i))
 
     override def createAggregationBuffer(): Array[Long] =
       new Array[Long]((bc.value.length + 63) / 64)
@@ -2757,24 +2505,10 @@ object expressions {
       s"mih_match_scan(broadcast#${bc.id}, maxHam=$maxHam, ${children.mkString(", ")})"
   }
 
-  /** [[MihMatchScan]] as a Column — per-call unique registration
-    * (name `mih_match_scan_b<id>`; drop with [[dropTempFunction]]
-    * ([[mihMatchScanName]]) after analysis). */
-  def mih_match_scan(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[MihQuerySet],
-      maxHam: Int, cols: Column*): Column = {
-    val name = s"mih_match_scan_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MihMatchScan(exprs, bc, maxHam), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[mih_match_scan]] registers. */
-  def mihMatchScanName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"mih_match_scan_b${bc.id}"
+  /** [[MihMatchScan]] as a Column. */
+  def mih_match_scan(bc: org.apache.spark.broadcast.Broadcast[MihQuerySet],
+      maxHam: Int, cols: Column*): Column =
+    GraftColumn(MihMatchScan(_, bc, maxHam), cols: _*)
 
   /** The broadcast operand of [[CosineScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the
@@ -2803,25 +2537,12 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 2)
-        return TypeCheckResult.TypeCheckFailure(
-          "cosine_scan_topk takes (vec_id, embedding)")
-      val a = requireType(children(0), LongType, "cosine_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      requireType(children(1), ArrayType(FloatType),
-        "cosine_scan_topk embedding")
-    }
+    override def dataType: DataType = rowType("neighbor_id", "score", DoubleType)
+    override protected def fnName: String = "cosine_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      "vec_id" -> LongType, "embedding" -> ArrayType(FloatType))
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -2834,8 +2555,9 @@ object expressions {
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
+    override protected def numQueries: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -2877,33 +2599,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, DescDouble.decode(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): CosineScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): CosineScanTopK =
@@ -2911,28 +2606,12 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): CosineScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"cosine_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[CosineScanTopK]] as a Column — per-call unique registration
-    * (name `cosine_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[cosineScanTopKName]]) after analysis). */
-  def cosine_scan_topk(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[CosineQuerySet],
-      k: Int, cols: Column*): Column = {
-    val name = s"cosine_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => CosineScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[cosine_scan_topk]] registers. */
-  def cosineScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"cosine_scan_topk_b${bc.id}"
+  /** [[CosineScanTopK]] as a Column. */
+  def cosine_scan_topk(bc: org.apache.spark.broadcast.Broadcast[CosineQuerySet],
+      k: Int, cols: Column*): Column =
+    GraftColumn(CosineScanTopK(_, bc, k), cols: _*)
 
   /** The broadcast operand of [[IvfScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the quantized
@@ -2970,50 +2649,18 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "ivf_scan_topk takes (vec_id, label, embedding)")
-      val a = requireType(children(0), LongType, "ivf_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), IntegerType, "ivf_scan_topk label")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(FloatType), "ivf_scan_topk embedding")
-    }
+    override def dataType: DataType = rowType("neighbor_id", "score", DoubleType)
+    override protected def fnName: String = "ivf_scan_topk"
+    override def checkInputDataTypes(): TypeCheckResult = requireArgs(fnName, children,
+      "vec_id" -> LongType, "label" -> IntegerType, "embedding" -> ArrayType(FloatType))
 
     /** cell label → query slots probing it, built once per task. */
-    @transient private lazy val probeIndex: java.util.HashMap[Integer, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Integer, scala.collection.mutable.ArrayBuffer[Int]]()
-      var qi = 0
-      while (qi < qs.length) {
-        val cells = qs(qi)._4
-        var ci = 0
-        while (ci < cells.length) {
-          var buf = m.get(cells(ci))
-          if (buf == null) {
-            buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-            m.put(cells(ci), buf)
-          }
-          buf += qi
-          ci += 1
-        }
-        qi += 1
-      }
-      val out = new java.util.HashMap[Integer, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
+    @transient private lazy val probeIndex = slotIndex[Integer](for {
+      (q, qi) <- bc.value.iterator.zipWithIndex
+      cell <- q._4.iterator
+    } yield (Integer.valueOf(cell), qi))
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -3023,8 +2670,9 @@ object expressions {
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
 
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
+    override protected def numQueries: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -3068,33 +2716,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, DescDouble.decode(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): IvfScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): IvfScanTopK =
@@ -3102,28 +2723,12 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): IvfScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"ivf_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[IvfScanTopK]] as a Column — per-call unique registration
-    * (name `ivf_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[ivfScanTopKName]]) after analysis). */
-  def ivf_scan_topk(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[IvfQuerySet],
-      k: Int, cols: Column*): Column = {
-    val name = s"ivf_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => IvfScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Name of the temp function [[ivf_scan_topk]] registers. */
-  def ivfScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"ivf_scan_topk_b${bc.id}"
+  /** [[IvfScanTopK]] as a Column. */
+  def ivf_scan_topk(bc: org.apache.spark.broadcast.Broadcast[IvfQuerySet],
+      k: Int, cols: Column*): Column =
+    GraftColumn(IvfScanTopK(_, bc, k), cols: _*)
 
   /** Compiled Naive-Bayes trigram model for [[NbScore]] — the
     * vocabulary-bounded (lang, gram, w_fp) / (lang, prior_fp, unseen_fp)
@@ -3244,22 +2849,9 @@ object expressions {
     override def toString: String = s"nb_score(broadcast#${bc.id}, $child)"
   }
 
-  /** [[NbScore]] as a Column — the per-broadcast unique registration
-    * pattern ([[pq_scan_topk]]). The entry is NOT dropped after use:
-    * compiled models are memoized per artifact (LangId.langIdModelCached),
-    * so a JVM holds a bounded handful of registrations whose broadcasts
-    * must stay live for lazily-analyzed consumer plans. */
-  def nb_score(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[NbCompiled],
-      text: Column): Column = {
-    val name = s"nb_score_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1, s"$name requires exactly 1 argument (text)")
-        NbScore(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, text)
-  }
+  /** [[NbScore]] as a Column. */
+  def nb_score(bc: org.apache.spark.broadcast.Broadcast[NbCompiled], text: Column): Column =
+    GraftColumn(e => NbScore(e.head, bc), text)
 
   /** PPJoin in-bucket pair generation: array<struct<doc_id:long, n:int,
     * rk:int>> (one bucket's prefix entries) → array<struct<a:long,
@@ -3600,228 +3192,144 @@ object expressions {
     }
   }
 
-  /** Register the kernels in the session's function registry (idempotent;
-    * also makes them usable from SQL as e.g. `minhash_signature(sh)`).
-    * Expression→Column constructors are sql-private in Spark 4, so the
-    * registry + `call_function` is the supported wiring.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String)(exprs: Seq[Expression]): Expression = {
-      require(exprs.length == 1, s"$name requires exactly 1 argument")
-      exprs.head
-    }
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(one("minhash_signature")(exprs), 64), "scala_udf")
-    reg.createOrReplaceTempFunction("quantized_cosine",
-      exprs => {
-        require(exprs.length == 2, "quantized_cosine requires exactly 2 arguments")
-        QuantizedCosine(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("jl_project",
-      exprs => JlProjectExpr(one("jl_project")(exprs), 16, 64, 1L << 20), "scala_udf")
-    reg.createOrReplaceTempFunction("long_cosine",
-      exprs => {
-        require(exprs.length == 2, "long_cosine requires exactly 2 arguments")
-        LongCosine(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprint",
-      exprs => WinnowFingerprint(one("winnow_fingerprint")(exprs), 8, 4), "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShingles(one("word_shingles")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("char_grams",
-      exprs => CharGrams(one("char_grams")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("char_gram_counts",
-      exprs => CharGramCounts(one("char_gram_counts")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(one("simhash64")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect_count requires exactly 2 arguments")
-        SortedIntersectCount(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect",
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect requires exactly 2 arguments")
-        SortedIntersect(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("dtw_dist",
-      exprs => {
-        require(exprs.length == 2, "dtw_dist requires exactly 2 arguments")
-        DtwDist(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_sigs",
-      exprs => HyperplaneSigs(one("hyperplane_sigs")(exprs), 8, 6, 64), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(one("shingle_hashes")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_vec",
-      exprs => QuantizeVec(one("quantize_vec")(exprs), 1048576.0), "scala_udf")
-    reg.createOrReplaceTempFunction("word_stats",
-      exprs => WordStats(one("word_stats")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("sq_dist",
-      exprs => {
-        require(exprs.length == 2, "sq_dist requires exactly 2 arguments")
-        SqDistLong(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("freq_sketch",
-      exprs => FreqSketch(one("freq_sketch")(exprs), 256), "scala_udf")
-    reg.createOrReplaceTempFunction("dhash64",
-      exprs => DHash64(one("dhash64")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_hashes",
-      exprs => BigramHashes(one("bigram_hashes")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_spans",
-      exprs => BigramSpans(one("bigram_spans")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("freq_sketch_long",
-      exprs => {
-        require(exprs.length == 2,
-          "freq_sketch_long requires exactly 2 arguments (hash, k)")
-        require(exprs(1).foldable, "freq_sketch_long k must be a literal")
-        FreqSketchLong(exprs(0), exprs(1).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc",
-      exprs => {
-        require(exprs.length == 3, "pq_adc requires exactly 3 arguments (codes, dtable, k)")
-        require(exprs(2).foldable, "pq_adc k must be a literal")
-        PqAdcDist(exprs(0), exprs(1), exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_encode",
-      exprs => {
-        require(exprs.length == 2,
-          "bpe_encode requires exactly 2 arguments (text, merges)")
-        BpeEncode(exprs(0), parseMergesLiteral(exprs(1)))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("ppjoin_pairs",
-      exprs => {
-        require(exprs.length == 3,
-          "ppjoin_pairs requires exactly 3 arguments (bucket, t, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "ppjoin_pairs t/maxBucket must be literals")
-        PPJoinPairs(exprs(0),
-          exprs(1).eval().toString.toDouble,
-          exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_bucket_pairs",
-      exprs => {
-        require(exprs.length == 3,
-          "simhash_bucket_pairs requires exactly 3 arguments (bucket, maxHam, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "simhash_bucket_pairs maxHam/maxBucket must be literals")
-        SimHashBucketPairs(exprs(0),
-          exprs(1).eval().toString.toInt,
-          exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    // Spark's own runtime-filter bloom pair (catalyst aggregate +
-    // scalar probe, a matched serialization), surfaced as callable
-    // functions: build once over the small side, probe as a broadcast
+  private def fn(name: String, usage: String, arity: Int)(
+      build: Seq[Expression] => Expression): (String, String, Seq[Expression] => Expression) =
+    (name, usage, args => {
+      require(args.length == arity, s"$name requires exactly $arity argument(s)")
+      build(args)
+    })
+
+  private def literalArg(e: Expression, what: String): String = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval().toString
+  }
+
+  /** The engine's SQL function surface, declared once as (name, usage,
+    * builder): [[graft.GraftExtensions]] injects it into sessions built
+    * with the extension, [[graft.Sessions.local]] registers the same
+    * entries, and the Column wrappers below build from it directly. */
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    fn("minhash_signature", "_FUNC_(shingles) - 64-permutation MinHash signature", 1)(
+      a => MinHashSignature(a(0), 64)),
+    fn("quantized_cosine", "_FUNC_(a, b) - exact 2^20-quantized cosine", 2)(
+      a => QuantizedCosine(a(0), a(1))),
+    fn("jl_project",
+      "_FUNC_(embedding) - 16-long Johnson-Lindenstrauss projection of a 64-dim vector", 1)(
+      a => JlProjectExpr(a(0), 16, 64, 1L << 20)),
+    fn("long_cosine", "_FUNC_(a, b) - cosine of two already-quantized long vectors", 2)(
+      a => LongCosine(a(0), a(1))),
+    fn("winnow_fingerprint", "_FUNC_(text) - winnowing fingerprint set (k=8, w=4)", 1)(
+      a => WinnowFingerprint(a(0), 8, 4)),
+    fn("word_shingles", "_FUNC_(text) - distinct word 3-gram shingles", 1)(
+      a => WordShingles(a(0), 3)),
+    fn("char_grams", "_FUNC_(text) - occurrence-level character 3-grams", 1)(
+      a => CharGrams(a(0), 3)),
+    fn("char_gram_counts",
+      "_FUNC_(text) - distinct character 3-grams with occurrence counts", 1)(
+      a => CharGramCounts(a(0), 3)),
+    fn("simhash64", "_FUNC_(shingles) - 64-bit SimHash over shingle features", 1)(
+      a => SimHash64(a(0))),
+    fn("sorted_intersect_count",
+      "_FUNC_(a, b) - distinct common values of two sorted long arrays", 2)(
+      a => SortedIntersectCount(a(0), a(1))),
+    fn("sorted_intersect",
+      "_FUNC_(a, b) - distinct common values of two sorted long arrays, ascending", 2)(
+      a => SortedIntersect(a(0), a(1))),
+    fn("dtw_dist", "_FUNC_(a, b) - integer Dynamic Time Warping distance of two long series", 2)(
+      a => DtwDist(a(0), a(1))),
+    fn("hyperplane_sigs",
+      "_FUNC_(embedding) - 8 random-hyperplane LSH signatures of 6 sign bits", 1)(
+      a => HyperplaneSigs(a(0), 8, 6, 64)),
+    fn("shingle_hashes",
+      "_FUNC_(text) - sorted xxhash64 values of distinct word 3-gram shingles", 1)(
+      a => ShingleHashes(a(0), 3)),
+    fn("quantize_vec", "_FUNC_(v) - exact 2^20 floor quantization of a float vector", 1)(
+      a => QuantizeVec(a(0), 1048576.0)),
+    fn("word_stats",
+      "_FUNC_(text) - struct(n_words, n_distinct, top_c, total2, d2) in one pass", 1)(
+      a => WordStats(a(0))),
+    fn("sq_dist", "_FUNC_(a, b) - sum of squared differences of two long arrays", 2)(
+      a => SqDistLong(a(0), a(1))),
+    fn("freq_sketch",
+      "_FUNC_(token) - Misra-Gries top-256 heavy-hitter sketch: array<struct(token, est)>", 1)(
+      a => FreqSketch(a(0), 256)),
+    fn("dhash64", "_FUNC_(frame) - 64-bit difference hash of a byte frame", 1)(
+      a => DHash64(a(0))),
+    fn("bigram_hashes", "_FUNC_(words) - xxhash64 of each adjacent word pair", 1)(
+      a => BigramHashes(a(0))),
+    fn("bigram_spans", "_FUNC_(words) - struct(hash, pos) per adjacent word pair", 1)(
+      a => BigramSpans(a(0))),
+    fn("freq_sketch_long",
+      "_FUNC_(hash, k) - Misra-Gries top-k sketch over long keys: array<struct(key, est)>", 2)(
+      a => FreqSketchLong(a(0), literalArg(a(1), "freq_sketch_long k").toInt)),
+    fn("pq_adc",
+      "_FUNC_(codes, dtable, k) - PQ asymmetric distance: sum of per-subspace table lookups", 3)(
+      a => PqAdcDist(a(0), a(1), literalArg(a(2), "pq_adc k").toInt)),
+    fn("bpe_encode",
+      "_FUNC_(text, merges) - greedy BPE subword apply over a literal merges table", 2)(
+      a => BpeEncode(a(0), parseMergesLiteral(a(1)))),
+    fn("ppjoin_pairs",
+      "_FUNC_(bucket, t, max_bucket) - PPJoin candidate pairs from one prefix bucket", 3)(
+      a => PPJoinPairs(a(0), literalArg(a(1), "ppjoin_pairs t").toDouble,
+        literalArg(a(2), "ppjoin_pairs max_bucket").toInt)),
+    fn("simhash_bucket_pairs",
+      "_FUNC_(bucket, max_ham, max_bucket) - in-bucket SimHash pairs within Hamming bound", 3)(
+      a => SimHashBucketPairs(a(0), literalArg(a(1), "simhash_bucket_pairs max_ham").toInt,
+        literalArg(a(2), "simhash_bucket_pairs max_bucket").toInt)),
+    // Spark's own runtime-filter bloom aggregate, surfaced as a callable
+    // function: build once over the small side, probe as a broadcast
     // literal — the engine's semi-join pre-filter at 100 TB (q68)
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => {
-        require(exprs.length == 2, "bloom_agg requires exactly 2 arguments (xxhash64 value, est items)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => {
-        require(exprs.length == 2, "bloom_might_contain requires exactly 2 arguments (bloom, xxhash64 value)")
-        // graft's own probe, not Spark's BloomFilterMightContain: the
-        // internal expression's codegen breaks on a non-foldable (scalar
-        // subquery) bloom argument — see [[BloomProbe]]'s scaladoc
-        BloomProbe(exprs(0), exprs(1))
-      }, "scala_udf")
-  }
+    fn("bloom_agg", "_FUNC_(xxhash64_value, est_items) - serialized bloom filter", 2)(
+      a => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+        a(0), a(1))),
+    // graft's own probe, not Spark's BloomFilterMightContain: the
+    // internal expression's codegen breaks on a non-foldable (scalar
+    // subquery) bloom argument — see [[BloomProbe]]'s scaladoc
+    fn("bloom_might_contain", "_FUNC_(bloom, xxhash64_value) - bloom membership probe", 2)(
+      a => BloomProbe(a(0), a(1))))
 
-  // Column-API wrappers (session must have passed through register —
-  // graft.Sessions.local does)
-  def minhash_signature(shingles: Column): Column =
-    call_function("minhash_signature", shingles)
-  def quantized_cosine(a: Column, b: Column): Column =
-    call_function("quantized_cosine", a, b)
-  def winnow_fingerprint(text: Column): Column =
-    call_function("winnow_fingerprint", text)
-  def word_shingles(text: Column): Column =
-    call_function("word_shingles", text)
-  def char_grams(text: Column): Column =
-    call_function("char_grams", text)
-  def char_gram_counts(text: Column): Column =
-    call_function("char_gram_counts", text)
-  def simhash64(shingles: Column): Column =
-    call_function("simhash64", shingles)
-  def jl_project(embedding: Column): Column =
-    call_function("jl_project", embedding)
-  def long_cosine(a: Column, b: Column): Column =
-    call_function("long_cosine", a, b)
+  private lazy val builders = sqlFunctions.map(f => f._1 -> f._3).toMap
+  private def kernel(name: String, cols: Column*): Column =
+    GraftColumn(builders(name), cols: _*)
+
+  def minhash_signature(shingles: Column): Column = kernel("minhash_signature", shingles)
+  def quantized_cosine(a: Column, b: Column): Column = kernel("quantized_cosine", a, b)
+  def winnow_fingerprint(text: Column): Column = kernel("winnow_fingerprint", text)
+  def word_shingles(text: Column): Column = kernel("word_shingles", text)
+  def char_grams(text: Column): Column = kernel("char_grams", text)
+  def char_gram_counts(text: Column): Column = kernel("char_gram_counts", text)
+  def simhash64(shingles: Column): Column = kernel("simhash64", shingles)
+  def jl_project(embedding: Column): Column = kernel("jl_project", embedding)
+  def long_cosine(a: Column, b: Column): Column = kernel("long_cosine", a, b)
   def sorted_intersect_count(a: Column, b: Column): Column =
-    call_function("sorted_intersect_count", a, b)
-  def sorted_intersect(a: Column, b: Column): Column =
-    call_function("sorted_intersect", a, b)
-  def dtw_dist(a: Column, b: Column): Column =
-    call_function("dtw_dist", a, b)
-  def hyperplane_sigs(embedding: Column): Column =
-    call_function("hyperplane_sigs", embedding)
-  def shingle_hashes(text: Column): Column =
-    call_function("shingle_hashes", text)
-  def quantize_vec(v: Column): Column =
-    call_function("quantize_vec", v)
-  def word_stats(text: Column): Column =
-    call_function("word_stats", text)
-  def sq_dist(a: Column, b: Column): Column =
-    call_function("sq_dist", a, b)
-  def freq_sketch(token: Column): Column =
-    call_function("freq_sketch", token)
+    kernel("sorted_intersect_count", a, b)
+  def sorted_intersect(a: Column, b: Column): Column = kernel("sorted_intersect", a, b)
+  def dtw_dist(a: Column, b: Column): Column = kernel("dtw_dist", a, b)
+  def hyperplane_sigs(embedding: Column): Column = kernel("hyperplane_sigs", embedding)
+  def shingle_hashes(text: Column): Column = kernel("shingle_hashes", text)
+  def quantize_vec(v: Column): Column = kernel("quantize_vec", v)
+  def word_stats(text: Column): Column = kernel("word_stats", text)
+  def sq_dist(a: Column, b: Column): Column = kernel("sq_dist", a, b)
+  def freq_sketch(token: Column): Column = kernel("freq_sketch", token)
   def freq_sketch_long(hash: Column, k: Int): Column =
-    call_function("freq_sketch_long", hash,
-      org.apache.spark.sql.functions.lit(k))
-  def dhash64(frame: Column): Column =
-    call_function("dhash64", frame)
-  def bigram_hashes(text: Column): Column =
-    call_function("bigram_hashes", text)
-  def bigram_spans(text: Column): Column =
-    call_function("bigram_spans", text)
+    GraftColumn(a => FreqSketchLong(a(0), k), hash)
+  def dhash64(frame: Column): Column = kernel("dhash64", frame)
+  def bigram_hashes(text: Column): Column = kernel("bigram_hashes", text)
+  def bigram_spans(text: Column): Column = kernel("bigram_spans", text)
   def pq_adc(codes: Column, dtable: Column, k: Int): Column =
-    call_function("pq_adc", codes, dtable,
-      org.apache.spark.sql.functions.lit(k))
+    GraftColumn(a => PqAdcDist(a(0), a(1), k), codes, dtable)
   def bpe_encode(text: Column, merges: Seq[(String, String)]): Column =
-    call_function("bpe_encode", text,
-      org.apache.spark.sql.functions.typedlit(merges))
+    GraftColumn(a => BpeEncode(a(0), merges), text)
   def ppjoin_pairs(bucket: Column, t: Double, maxBucket: Int): Column =
-    call_function("ppjoin_pairs", bucket,
-      org.apache.spark.sql.functions.lit(t),
-      org.apache.spark.sql.functions.lit(maxBucket))
+    GraftColumn(a => PPJoinPairs(a(0), t, maxBucket), bucket)
   def simhash_bucket_pairs(bucket: Column, maxHam: Int, maxBucket: Int): Column =
-    call_function("simhash_bucket_pairs", bucket,
-      org.apache.spark.sql.functions.lit(maxHam),
-      org.apache.spark.sql.functions.lit(maxBucket))
-  def bloom_agg(hashed: Column, estItems: Column): Column =
-    call_function("bloom_agg", hashed, estItems)
+    GraftColumn(a => SimHashBucketPairs(a(0), maxHam, maxBucket), bucket)
+  def bloom_agg(hashed: Column, estItems: Column): Column = kernel("bloom_agg", hashed, estItems)
   def bloom_might_contain(bloom: Column, hashed: Column): Column =
-    call_function("bloom_might_contain", bloom, hashed)
+    kernel("bloom_might_contain", bloom, hashed)
 
-  /** [[BloomProbeBroadcast]] as a Column. Expression→Column constructors
-    * are sql-private in Spark 4, so this routes through the function
-    * registry like everything else — but the broadcast is per-call state,
-    * so the builder is registered under a name UNIQUE to `bc`
-    * (`bloom_probe_bc_b<id>`): concurrent callers on one session can
-    * never bind each other's filter, whatever order their plans analyze
-    * in. Callers should still force analysis (e.g.
-    * `df.queryExecution.analyzed`, as q68 does) and then release the
-    * entry with [[dropTempFunction]]([[bloomProbeName]]).
-    */
-  def bloom_probe_broadcast(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-      hashed: Column): Column = {
-    val name = bloomProbeName(bc)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => {
-        require(exprs.length == 1, "bloom_probe_bc requires exactly 1 argument")
-        BloomProbeBroadcast(bc, exprs.head)
-      }, "scala_udf")
-    call_function(name, hashed)
-  }
-
-  /** Name of the temp function [[bloom_probe_broadcast]] registers for
-    * `bc` — for [[dropTempFunction]] once the caller's plan is analyzed. */
-  def bloomProbeName(bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bloom_probe_bc_b${bc.id}"
+  /** [[BloomProbeBroadcast]] as a Column. */
+  def bloom_probe_broadcast(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
+      hashed: Column): Column =
+    GraftColumn(e => BloomProbeBroadcast(bc, e.head), hashed)
 }

@@ -3760,7 +3760,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
           try {
             val candidates = docs.filter($"split" === "train")
               .withColumn("n_hit",
-                size(filter($"hs", h => E.bloom_probe_broadcast(s, bc, h)))
+                size(filter($"hs", h => E.bloom_probe_broadcast(bc, h)))
                   .cast("long"))
               .filter($"n_hit" >= 8)
             candidates.select($"doc_id", explode($"hs").as("h"))
@@ -3774,10 +3774,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
               // construction) while `docs` is still persisted, then release
               // the filter broadcast instead of leaving it to driver GC
               .localCheckpoint()
-          } finally {
-            E.dropTempFunction(s, E.bloomProbeName(bc))
-            bc.destroy()
-          }
+          } finally bc.destroy()
         }
       } finally docs.unpersist()
     },
@@ -4263,8 +4260,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * results on the same rows by construction. */
   private[graft] def bm25TopK(store: DataFrame,
       qrows: Array[(Long, Array[Long])], k: Int): DataFrame = {
-    // register on the STORE's session — a streaming foreachBatch hands
-    // per-batch cloned sessions whose registry the store plan never sees
     val s = store.sparkSession
     import s.implicits._
     val byTerm = qrows.zipWithIndex
@@ -4275,18 +4270,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       offsets, byTerm.flatMap(_._2.map(_._2))))
     try {
       store.agg(graft.functions.expressions
-          .bm25_scan_topk(s, bc, k, $"doc_id", $"hs", $"ws").as("t"))
+          .bm25_scan_topk(bc, k, $"doc_id", $"hs", $"ws").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.score_fp",
           $"e.rank".cast("long").as("rank"))
         .orderBy($"query_id", $"rank")
         // materialize (nq·k rows) so the broadcast can be destroyed now
         .localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropTempFunction(
-        s, graft.functions.expressions.bm25ScanTopKName(bc))
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   /** Absolute cap on the bench request-set fixture: `doc_id % 37 = 0 AND
@@ -6221,8 +6212,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * the CURRENT df table + totals, broadcast them with the inverted
     * query index, run ONE [[graft.functions.expressions
     * .Bm25RawScanTopK]] scan over the postings. [[bm25TopK]]'s serving
-    * hygiene (unique registration, materialize nq·k rows, destroy the
-    * broadcast). */
+    * hygiene (materialize nq·k rows, destroy the broadcast). */
   private[graft] def bm25RawTopK(raw: Bm25Raw,
       qrows: Array[(Long, Array[Long])], k: Int): DataFrame = {
     val s = raw.postings.sparkSession
@@ -6250,18 +6240,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       offsets, byTerm.flatMap(_._2.map(_._2)), idfFp, avgdl))
     try {
       raw.postings.agg(graft.functions.expressions
-          .bm25_raw_scan_topk(s, bc, k, $"doc_id", $"hs", $"tfs", $"len")
+          .bm25_raw_scan_topk(bc, k, $"doc_id", $"hs", $"tfs", $"len")
           .as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.score_fp",
           $"e.rank".cast("long").as("rank"))
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropTempFunction(
-        s, graft.functions.expressions.bm25RawScanTopKName(bc))
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   /** Remove documents from the raw BM25 artifact — the deletion half of
@@ -6818,12 +6804,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         val pre = if (nDup == 0) grams else {
           val bloom = dupKeys.agg(E.bloom_agg($"key", lit(nDup)).as("bf"))
             .collect()(0).getAs[Array[Byte]](0)
-          val bc = s.sparkContext.broadcast(bloom)
-          try {
-            val filtered = grams.filter(E.bloom_probe_broadcast(s, bc, $"key"))
-            filtered.queryExecution.analyzed // bind the probe before the drop
-            filtered
-          } finally E.dropTempFunction(s, E.bloomProbeName(bc))
+          grams.filter(E.bloom_probe_broadcast(s.sparkContext.broadcast(bloom), $"key"))
         }
         val flagged = pre.join(dupKeys, Seq("key"), "left_semi")
           .groupBy($"doc_id").agg(sort_array(collect_list($"s")).as("starts"))

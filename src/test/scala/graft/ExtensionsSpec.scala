@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The stock-cluster path: a session built through [[GraftExtensions]]
   * (as `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
-  * would), with NO imperative `expressions.register` call, must resolve
-  * every injected kernel from SQL. Every other suite goes through
-  * `Sessions.local`, which registers imperatively — a broken injection
-  * would stay green there.
+  * would), with no imperative registration, must resolve every injected
+  * kernel from SQL. Every other suite goes through `Sessions.local`,
+  * which registers imperatively — a broken injection would stay green
+  * there.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -65,7 +65,11 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT dtw_dist(array(1L, 2L), array(1L, 3L))",
         "SELECT freq_sketch_long(h, 16) FROM (SELECT xxhash64('a') AS h)",
         "SELECT simhash_bucket_pairs(array(named_struct('doc_id', 1L, 'simhash', 1L), " +
-          "named_struct('doc_id', 2L, 'simhash', 3L)), 7, 4096)")
+          "named_struct('doc_id', 2L, 'simhash', 3L)), 7, 4096)",
+        "SELECT jl_project(array_repeat(0.5F, 64))",
+        "SELECT long_cosine(array(1L, 2L), array(2L, 3L))",
+        "SELECT char_gram_counts('abcd')",
+        "SELECT dhash64(X'0102')")
       resolveOnly.foreach(q => assert(s.sql(q).count() == 1, q))
       // aggregates inject too: MG sketch end-to-end, bloom build+probe
       // round-trip (build over xxhash64'd values, probe one present and

@@ -380,7 +380,7 @@ class ExpressionsSpec extends SparkSpec {
     val probeRange = (4000L to 6000L).toDF("h")
     // bit-identical verdicts vs the literal form on hits AND misses
     val viaBc = probeRange
-      .filter(expressions.bloom_probe_broadcast(spark, bc, $"h"))
+      .filter(expressions.bloom_probe_broadcast(bc, $"h"))
       .collect().map(_.getLong(0)).toSeq
     val viaLit = probeRange
       .filter(expressions.bloom_might_contain(lit(bf), $"h"))
@@ -388,7 +388,7 @@ class ExpressionsSpec extends SparkSpec {
     assert(viaBc == viaLit)
     // plan representations carry the broadcast handle, not the payload:
     // the filter is ~KBs, every plan string must stay far below it
-    val planned = probeRange.filter(expressions.bloom_probe_broadcast(spark, bc, $"h"))
+    val planned = probeRange.filter(expressions.bloom_probe_broadcast(bc, $"h"))
     val qe = planned.queryExecution
     assert(bf.length > 4000, s"test filter unexpectedly small: ${bf.length}")
     for (p <- Seq(qe.analyzed.toString, qe.optimizedPlan.toString, qe.executedPlan.toString))
@@ -396,7 +396,7 @@ class ExpressionsSpec extends SparkSpec {
     // and the lambda path (how q68 uses it) agrees with the scalar path
     val arr = Seq((1L, Seq(1L, 2L, 9999999L))).toDF("id", "hs")
       .select($"id", size(filter($"hs",
-        h => expressions.bloom_probe_broadcast(spark, bc, h))).as("n_hit"))
+        h => expressions.bloom_probe_broadcast(bc, h))).as("n_hit"))
       .head().getInt(1)
     assert(arr == 2)
   }
@@ -422,24 +422,16 @@ class ExpressionsSpec extends SparkSpec {
       .collect()(0).getAs[Array[Byte]](0)
     val bcEven = spark.sparkContext.broadcast(bloomOf(0L to 100L by 2))
     val bcOdd = spark.sparkContext.broadcast(bloomOf(1L to 101L by 2))
-    // build BOTH columns before analyzing either: a session-global temp
-    // function name would make the second registration clobber the first
-    // and colEven would silently bind the odd filter (ADVICE r6)
-    val colEven = expressions.bloom_probe_broadcast(spark, bcEven, $"h")
-    val colOdd = expressions.bloom_probe_broadcast(spark, bcOdd, $"h")
+    // build BOTH columns before analyzing either: each must keep its own
+    // filter, never bind the other's (ADVICE r6)
+    val colEven = expressions.bloom_probe_broadcast(bcEven, $"h")
+    val colOdd = expressions.bloom_probe_broadcast(bcOdd, $"h")
     val probe = (0L to 9L).toDF("h")
     val hitsEven = probe.filter(colEven).collect().map(_.getLong(0)).toSet
     val hitsOdd = probe.filter(colOdd).collect().map(_.getLong(0)).toSet
     // no false negatives: each probe must keep ALL of its own set
     assert((0L to 9L by 2).forall(hitsEven), s"even probe lost members: $hitsEven")
     assert((1L to 9L by 2).forall(hitsOdd), s"odd probe lost members: $hitsOdd")
-    // the per-broadcast entry can be dropped and re-registered cleanly
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcEven))
-    val again = probe.filter(expressions.bloom_probe_broadcast(spark, bcEven, $"h"))
-      .collect().map(_.getLong(0)).toSet
-    assert(again == hitsEven)
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcEven))
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcOdd))
     bcEven.destroy(); bcOdd.destroy()
   }
 
@@ -528,7 +520,7 @@ class ExpressionsSpec extends SparkSpec {
         Array(0, 1, 2, 3, 4), Array(0, 0, 1, 1)))
     try {
       val got = docs
-        .agg(expressions.bm25_scan_topk(spark, bc, 2,
+        .agg(expressions.bm25_scan_topk(bc, 2,
           $"doc_id", $"hs", $"ws").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.rank", $"e.score_fp")
@@ -539,10 +531,7 @@ class ExpressionsSpec extends SparkSpec {
       assert(got.toSeq == Seq(
         (1L, 2L, 1, 7L), (1L, 5L, 2, 7L),
         (3L, 4L, 1, 9L), (3L, 2L, 2, 1L)))
-    } finally {
-      expressions.dropTempFunction(spark, expressions.bm25ScanTopKName(bc))
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   test("bm25_raw_scan_topk: in-scan weights match the builder formula; alignment guard") {
@@ -561,7 +550,7 @@ class ExpressionsSpec extends SparkSpec {
         Array(2L, 3L), 4.0))
     try {
       val got = docs
-        .agg(expressions.bm25_raw_scan_topk(spark, bc, 5,
+        .agg(expressions.bm25_raw_scan_topk(bc, 5,
           $"doc_id", $"hs", $"tfs", $"len").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.rank", $"e.score_fp")
@@ -570,26 +559,20 @@ class ExpressionsSpec extends SparkSpec {
       assert(got.toSeq == Seq(
         (7L, 2L, 1, 2L * 1571428L), (7L, 1L, 2, 2L * 1000000L),
         (8L, 1L, 1, 3L * 1375000L), (8L, 3L, 2, 3L * 1000000L)))
-    } finally {
-      expressions.dropTempFunction(spark, expressions.bm25RawScanTopKName(bc))
-      bc.destroy()
-    }
+    } finally bc.destroy()
     // misaligned store: tfs shorter than hs must fail loudly
     val bad = Seq((1L, Seq(10L, 20L), Seq(1L), 4L)).toDF("doc_id", "hs", "tfs", "len")
     val bc2 = spark.sparkContext.broadcast(
       (Array(7L), Array(10L), Array(0, 1), Array(0), Array(2L), 4.0))
     try {
       val e = intercept[Exception] {
-        bad.agg(expressions.bm25_raw_scan_topk(spark, bc2, 5,
+        bad.agg(expressions.bm25_raw_scan_topk(bc2, 5,
           $"doc_id", $"hs", $"tfs", $"len").as("t")).collect()
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
       assert(msgs(e).exists(m => m != null && m.contains("must align")))
-    } finally {
-      expressions.dropTempFunction(spark, expressions.bm25RawScanTopKName(bc2))
-      bc2.destroy()
-    }
+    } finally bc2.destroy()
   }
 
   test("kernels are callable from SQL") {
@@ -646,16 +629,13 @@ class ExpressionsSpec extends SparkSpec {
       }.sortBy(_._1).toArray
     val bc = spark.sparkContext.broadcast(qrows)
     val got =
-      try emb.agg(expressions.ivf_scan_topk(spark, bc, 3,
+      try emb.agg(expressions.ivf_scan_topk(bc, 3,
           $"vec_id", $"label", $"embedding").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.score")
         .orderBy($"query_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      finally {
-        expressions.dropTempFunction(spark, expressions.ivfScanTopKName(bc))
-        bc.destroy()
-      }
+      finally bc.destroy()
     // declarative reference: probe equi-join + exact kernel + window
     val probes = probeSets.toSeq
       .flatMap { case (q, cells) => cells.map(c => (q, c)) }
@@ -691,19 +671,75 @@ class ExpressionsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .select($"vec_id", transform($"embedding", _.cast("float")).as("embedding"))
     val got =
-      try emb.agg(expressions.cosine_scan_topk(spark, bc, 5,
+      try emb.agg(expressions.cosine_scan_topk(bc, 5,
           $"vec_id", $"embedding").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.score")
         .orderBy($"query_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      finally {
-        expressions.dropTempFunction(spark, expressions.cosineScanTopKName(bc))
-        bc.destroy()
-      }
+      finally bc.destroy()
     // per-pair n == qv.length is the only dim gate: the longer-dim query
     // (after a shorter first query) still scores its matching row
     assert(got.map(t => (t._1, t._2)).toSeq == Seq((100L, 1L), (200L, 2L)))
     assert(got.forall(_._3 > 0.999)) // parallel vectors, cosine ≈ 1
+  }
+
+  test("broadcast-carrying kernels leave no per-broadcast function in the registry") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val emb = Seq((1L, 0, Seq(1.0f, 0.0f)), (2L, 0, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "label", "embedding")
+      .select($"vec_id", $"label", transform($"embedding", _.cast("float")).as("embedding"))
+    val q = Array(1048576L, 0L)
+    def rows(df: org.apache.spark.sql.DataFrame): Int = df.collect().length
+    assert(rows(emb.select(expressions.cell_argmax(
+      sc.broadcast(new expressions.CellCents(Array(7L), Array(q), Array(q.map(x => x * x).sum))),
+      $"embedding"))) == 2)
+    assert(rows(emb.agg(expressions.cosine_scan_topk(
+      sc.broadcast(Array((9L, q, q.map(x => x * x).sum)): expressions.CosineQuerySet), 1,
+      $"vec_id", $"embedding"))) == 1)
+    assert(rows(emb.agg(expressions.ivf_scan_topk(
+      sc.broadcast(Array((9L, q, q.map(x => x * x).sum, Array(0))): expressions.IvfQuerySet), 1,
+      $"vec_id", $"label", $"embedding"))) == 1)
+    assert(rows(emb.select($"vec_id", $"embedding", array(lit(0)).as("sigs"))
+      .agg(expressions.lsh_scan_topk(
+        sc.broadcast(Array((9L, q, q.map(x => x * x).sum, Array(0))): expressions.LshQuerySet),
+        1, 6, $"vec_id", $"embedding", $"sigs"))) == 1)
+    assert(rows(Seq((1L, Seq(0, 1))).toDF("vec_id", "codes")
+      .agg(expressions.pq_scan_topk(
+        sc.broadcast(Array((9L, Array(1L, 2L, 3L, 4L), Array.empty[Int]))), 1, 2,
+        $"vec_id", $"codes"))) == 1)
+    val docs = Seq((1L, Seq(10L), Seq(5L), Seq(1L), 4L)).toDF("doc_id", "hs", "ws", "tfs", "len")
+    assert(rows(docs.agg(expressions.bm25_scan_topk(
+      sc.broadcast((Array(9L), Array(10L), Array(0, 1), Array(0))), 1,
+      $"doc_id", $"hs", $"ws"))) == 1)
+    assert(rows(docs.agg(expressions.bm25_raw_scan_topk(
+      sc.broadcast((Array(9L), Array(10L), Array(0, 1), Array(0), Array(2L), 4.0)), 1,
+      $"doc_id", $"hs", $"tfs", $"len"))) == 1)
+    assert(rows(Seq((0, 1, 1L)).toDF("band", "bv", "h")
+      .agg(expressions.mih_match_scan(sc.broadcast(Array(1L)), 1, $"band", $"bv", $"h"))) == 1)
+    assert(rows(Seq("abcd").toDF("t").select(expressions.nb_score(
+      sc.broadcast(expressions.NbCompiled(Array(0L), Array(-1L), Seq(("abc", 0, 5L)))),
+      $"t"))) == 1)
+    val bloom = Seq(1L).toDF("h").agg(expressions.bloom_agg($"h", lit(8L)))
+      .collect()(0).getAs[Array[Byte]](0)
+    assert(rows(Seq(1L, 2L).toDF("h")
+      .filter(expressions.bloom_probe_broadcast(sc.broadcast(bloom), $"h"))) >= 1)
+    // a Lloyd loop: one centroid broadcast per round
+    val pts = Seq(Seq(0L, 1L), Seq(1L, 0L), Seq(9L, 10L), Seq(10L, 9L)).toDF("xq")
+    var cents = Array(Array(0L, 0L), Array(1L, 1L))
+    for (_ <- 1 to 3) {
+      val assigned = pts
+        .select($"xq", expressions.centroid_argmin(sc.broadcast(cents), $"xq").as("a"))
+        .select($"a.cid", $"xq").collect()
+      cents = cents.indices.map { c =>
+        val mine = assigned.filter(_.getInt(0) == c).map(_.getSeq[Long](1)).toSeq
+        if (mine.isEmpty) cents(c) else mine.transpose.map(_.sum / mine.length).toArray
+      }.toArray
+    }
+    assert(cents.map(_.toSeq).toSeq == Seq(Seq(0L, 0L), Seq(9L, 9L)))
+    val leaked = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.matches(".*_b\\d+$"))
+    assert(leaked.isEmpty, s"per-broadcast functions left in the registry: $leaked")
   }
 }
